@@ -26,7 +26,7 @@ trial loop (A38).
 from __future__ import annotations
 
 import json
-from typing import Callable, Dict, List, Sequence
+from typing import Dict, List, Sequence
 
 import numpy as np
 import pandas as pd
@@ -34,8 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from duke_spark.kernel.tree import (aggregate_tree_scores,
-                                    parent_children_funcs)
+from duke_spark.kernel.tree import TreeAgg, aggregate_tree_scores
 from duke_spark.operators.canonical import conversation_class_scores
 from duke_spark.operators.linking import score_mentions_batch
 from duke_spark.operators.mentions import linked_mentions
@@ -65,14 +64,12 @@ def label_vector(positives: Sequence[str],
 
 # --- config grid (A37) -----------------------------------------------------
 
-def config_grid() -> Dict[str, Callable]:
+def config_grid() -> Dict[str, TreeAgg]:
     """Tree-agg combos like ``Duke/agg_functions.py:25-28`` /
     ``Duke/evaluate.py:115-122``: parent × children ∈ {mean, max}²."""
-    funcs = {"mean": np.mean, "max": max}
-    return {
-        f"parent={pn},children={cn}": parent_children_funcs(pf, cf)
-        for pn, pf in funcs.items() for cn, cf in funcs.items()
-    }
+    funcs = ("mean", "max")
+    return {f"parent={p},children={c}": TreeAgg(p, c)
+            for p in funcs for c in funcs}
 
 
 # --- evaluation (A33 + A36) ------------------------------------------------
@@ -87,28 +84,30 @@ EVAL_SCHEMA = T.StructType([
 
 
 def evaluate_config(conv_scores: DataFrame, ctx_bc, labels_bc,
-                    config_name: str, tree_agg: Callable) -> DataFrame:
-    """Fold each conversation's mean score vector with ``tree_agg`` and
-    score it against the golden labels — all inside the workers."""
+                    config_name: str, tree_agg: TreeAgg) -> DataFrame:
+    """Fold the labelled conversations' mean score vectors with
+    ``tree_agg`` (one call per Arrow batch) and score each against its
+    golden labels — all inside the workers."""
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         ctx = ctx_bc.value
         labels: Dict[str, List[str]] = labels_bc.value
+        columns = [f.name for f in EVAL_SCHEMA.fields]
+        rows = [(c, v) for c, v in zip(pdf["conv_id"], pdf["mean_scores"])
+                if labels.get(c)]
+        if not rows:
+            return pd.DataFrame([], columns=columns)
+        folded = aggregate_tree_scores(
+            ctx.classes, np.stack([v for _, v in rows]), ctx.levels,
+            tree_agg)
         out = []
-        for r in pdf.itertuples(index=False):
-            pos_classes = labels.get(r.conv_id)
-            if not pos_classes:
-                continue
-            vec = np.asarray(r.mean_scores, dtype=np.float64)
-            agg = aggregate_tree_scores(ctx.classes, vec, ctx.tree,
-                                        tree_agg)
-            lv = label_vector(pos_classes, ctx.classes)
+        for (conv_id, _), agg in zip(rows, folded):
+            lv = label_vector(labels[conv_id], ctx.classes)
             avg_pos = float(agg[lv > 0].mean()) if (lv > 0).any() else 0.0
             avg_neg = float(agg[lv < 0].mean()) if (lv < 0).any() else 0.0
-            out.append((config_name, r.conv_id, avg_pos, avg_neg,
+            out.append((config_name, conv_id, avg_pos, avg_neg,
                         avg_pos - avg_neg))
-        return pd.DataFrame(out, columns=[f.name for f in
-                                          EVAL_SCHEMA.fields])
+        return pd.DataFrame(out, columns=columns)
 
     return conv_scores.mapInPandas(
         lambda it: (run(pdf) for pdf in it), schema=EVAL_SCHEMA)
@@ -116,7 +115,7 @@ def evaluate_config(conv_scores: DataFrame, ctx_bc, labels_bc,
 
 def run_config_grid(spark: SparkSession, transcripts: DataFrame, ctx_bc,
                     labels: Dict[str, List[str]],
-                    configs: Dict[str, Callable] | None = None) -> DataFrame:
+                    configs: Dict[str, TreeAgg] | None = None) -> DataFrame:
     """Embed/link once, evaluate every config (``Duke/evaluate.py:78-103``
     reuse pattern). Returns (config, conv_id, avg_pos, avg_neg,
     score_gap)."""

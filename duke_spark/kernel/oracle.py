@@ -34,14 +34,13 @@ canonical type = argmax (first occurrence wins).
 
 from __future__ import annotations
 
-from typing import Dict, List, Sequence, Tuple
+from typing import Callable, Dict, List, Mapping, Sequence, Tuple
 
 import numpy as np
 import pandas as pd
 
 from duke_spark.kernel.text import normalize_text, pluralize
-from duke_spark.kernel.tree import (PRODUCTION_TREE_AGG, Tree,
-                                    aggregate_tree_scores,
+from duke_spark.kernel.tree import (PRODUCTION_TREE_AGG, Tree, get_leaves,
                                     normalize_class_tree)
 from duke_spark.kernel.vectors import (VocabEmbedding, chunk_in_vocab_runs,
                                        score_against_classes, unit_norm_rows)
@@ -116,16 +115,74 @@ def oracle_triples(ctx: OracleContext, transcripts: pd.DataFrame) -> pd.DataFram
                                        "turn_idx", "score"])
 
 
+def tree_score(score_map: Mapping[str, float], tree: Tree,
+               agg_func: Callable[[Sequence[float]], float]) -> Dict[str, float]:
+    """Bottom-up layered aggregation (``Duke/class_tree.py:63-91``) — the
+    scalar oracle for ``kernel.tree.aggregate_tree_scores``.
+
+    Processes leaves first, then repeatedly the parents whose children are
+    all aggregated. Matches the reference's layer semantics including the
+    single multi-parent node case (a node joins a layer only when every
+    child has a score). Guard differs deliberately from the reference's
+    truthiness test (``class_tree.py:71`` treats a 0.0 child score as
+    "not yet aggregated") — we use explicit membership, which is the
+    evident intent; fixture scores are kept nonzero so parity is exact.
+    """
+    agg_score: Dict[str, float] = {}
+    processed: set = set()
+
+    def process(nodes):
+        for node in nodes:
+            vals = [score_map[node]]
+            children = tree[node].get("children") or []
+            vals.extend(agg_score[c] for c in children)
+            agg_score[node] = agg_func(vals)
+            processed.add(node)
+
+    layer = get_leaves(tree)
+    process(layer)
+    remaining = set(tree) - processed
+    while remaining:
+        parents = {p for n in layer for p in tree[n]["parents"]}
+        parents -= processed
+        ready = [p for p in parents
+                 if all(c in agg_score for c in tree[p]["children"])]
+        if not ready:
+            # asymmetric edges (a child whose parents list omits this
+            # node) hide a node from the parent walk: take every
+            # remaining node whose children are all scored. None ready
+            # means the remaining nodes close a cycle.
+            ready = [n for n in sorted(remaining)
+                     if all(c in agg_score for c in tree[n]["children"])]
+            if not ready:
+                raise ValueError(f"class tree has a cycle: {len(remaining)} "
+                                 "classes never have all children scored")
+        process(ready)
+        layer = ready
+        remaining -= processed
+    return agg_score
+
+
+def oracle_fold(ctx, scores: np.ndarray,
+                tree_agg=PRODUCTION_TREE_AGG) -> np.ndarray:
+    """``tree_score`` of one class-score vector, in ``ctx.classes`` order."""
+    agg = tree_score(dict(zip(ctx.classes, scores.tolist())), ctx.tree,
+                     tree_agg)
+    return np.array([agg[c] for c in ctx.classes])
+
+
+def oracle_topic(ctx, scores: np.ndarray) -> str:
+    """Canonical class of one score vector: production fold, then argmax
+    (first occurrence wins, ``Duke/dataset_descriptor.py:84``)."""
+    return ctx.classes[int(np.argmax(oracle_fold(ctx, scores)))]
+
+
 def oracle_canonical_types(ctx: OracleContext,
                            mentions: pd.DataFrame) -> Dict[str, str]:
     """Per-entity canonical type via tree-aggregated mean score vector."""
-    out: Dict[str, str] = {}
-    for entity, grp in mentions.groupby("entity", sort=True):
-        mean_scores = np.mean(np.stack(grp["class_scores"].to_list()), axis=0)
-        agg = aggregate_tree_scores(ctx.classes, mean_scores, ctx.tree,
-                                    PRODUCTION_TREE_AGG)
-        out[entity] = ctx.classes[int(np.argmax(agg))]
-    return out
+    return {entity: oracle_topic(ctx, np.mean(
+                np.stack(grp["class_scores"].to_list()), axis=0))
+            for entity, grp in mentions.groupby("entity", sort=True)}
 
 
 # --- Duke-parity "what is this conversation about?" path -------------------
@@ -160,9 +217,7 @@ def describe_conversation(ctx: OracleContext, conv: pd.DataFrame,
         vecs = ctx.embedding.embed_groups(data[src])
         sim = score_against_classes(vecs, ctx.class_matrix)      # cells × C
         row_scores = row_agg(sim)                                # length C
-        tree_scores = aggregate_tree_scores(ctx.classes, row_scores,
-                                            ctx.tree, tree_agg)
-        per_source.append(tree_scores)
+        per_source.append(oracle_fold(ctx, row_scores, tree_agg))
     if not per_source:
         return None
     final = source_agg(np.stack(per_source))

@@ -5,21 +5,24 @@ Reference semantics (reimplemented, not copied):
     (``Duke/class_tree.py:49-52``);
   * OOV classes dropped, then stripped from every parents/children list
     (``Duke/class_tree.py:36-46``);
-  * bottom-up layered fold: a node is processed once all its children are
-    aggregated; node score = agg_func([own_score, child_agg_scores...])
-    (``Duke/class_tree.py:63-102``);
-  * production agg config: ``parent_children_funcs(np.mean, max)``
-    (``Duke/agg_functions.py:16-23``, used at ``Duke/DukeRestListener.py:38``
-    and ``Duke/scripts/main.py:12``).
+  * bottom-up fold: a node is aggregated once all its children are;
+    node score = parent([own, children(child_agg_scores)])
+    (``Duke/class_tree.py:63-102``, ``Duke/agg_functions.py:16-23``);
+  * production agg config: parent = mean, children = max
+    (``Duke/DukeRestListener.py:38``, ``Duke/scripts/main.py:12``).
 
-The tree is tiny (≤788 nodes) so the fold runs driver-side on collected
-per-entity score vectors; the kernels here are deliberately Spark-free.
+``aggregate_tree_scores`` is the one production fold. It folds a (C,)
+vector or an (N, C) matrix with one gather per (tree level, fan-out)
+group of a ``TreeLevels`` schedule, so a caller folds a whole batch of
+entities, conversations or sources in one call. The scalar dict walk it
+must equal bit-for-bit is ``kernel.oracle.tree_score``.
 """
 
 from __future__ import annotations
 
 import json
-from typing import Callable, Dict, List, Mapping, Sequence
+from dataclasses import dataclass
+from typing import Callable, Dict, List, Sequence, Union
 
 import numpy as np
 
@@ -50,91 +53,89 @@ def get_leaves(tree: Tree) -> List[str]:
     return [n for n, rels in tree.items() if not rels.get("children")]
 
 
-def tree_score(score_map: Mapping[str, float], tree: Tree,
-               agg_func: Callable[[Sequence[float]], float]) -> Dict[str, float]:
-    """Bottom-up layered aggregation (``Duke/class_tree.py:63-91``).
+@dataclass(frozen=True)
+class TreeAgg:
+    """Composed agg ``parent([own, children(child_scores)])`` with parent
+    and children each "mean" or "max" (``Duke/agg_functions.py:16-23``).
+    Calling it on one node's ``[own, *child_scores]`` list is the scalar
+    form the oracle fold uses; the batched fold reads the two names."""
+    parent: str
+    children: str
 
-    Processes leaves first, then repeatedly the parents whose children are
-    all aggregated. Matches the reference's layer semantics including the
-    single multi-parent node case (a node joins a layer only when every
-    child has a score). Guard differs deliberately from the reference's
-    truthiness test (``class_tree.py:71`` treats a 0.0 child score as
-    "not yet aggregated") — we use explicit membership, which is the
-    evident intent; fixture scores are kept nonzero so parity is exact.
-    """
-    agg_score: Dict[str, float] = {}
-    processed: set = set()
+    def __post_init__(self):
+        for f in (self.parent, self.children):
+            if f not in _SCALAR:
+                raise ValueError(f"tree agg must be mean or max, got {f!r}")
 
-    def process(nodes):
-        for node in nodes:
-            vals = [score_map[node]]
-            children = tree[node].get("children") or []
-            vals.extend(agg_score[c] for c in children)
-            agg_score[node] = agg_func(vals)
-            processed.add(node)
-
-    layer = get_leaves(tree)
-    process(layer)
-    remaining = set(tree) - processed
-    while remaining:
-        parents = {p for n in layer for p in tree[n]["parents"]}
-        parents -= processed
-        ready = [p for p in parents
-                 if all(c in agg_score for c in tree[p]["children"])]
-        if not ready:
-            # isolated cycles / orphans: process whatever remains directly
-            ready = sorted(remaining)
-        process(ready)
-        layer = ready
-        remaining -= processed
-    return agg_score
-
-
-def parent_children_funcs(parent: Callable, children: Callable,
-                          prep: Callable = lambda v: v) -> Callable:
-    """Composed agg: ``parent([own, children(child_scores)])``
-    (``Duke/agg_functions.py:16-23``)."""
-
-    def custom_agg(vector):
-        vector = prep(vector)
+    def __call__(self, vector: Sequence[float]) -> float:
         if len(vector) > 1:
-            return parent([vector[0], children(vector[1:])])
+            return _SCALAR[self.parent](
+                [vector[0], _SCALAR[self.children](vector[1:])])
         return vector[0]
 
-    return custom_agg
+
+_SCALAR = {"mean": np.mean, "max": max}
+
+PRODUCTION_TREE_AGG = TreeAgg("mean", "max")
 
 
-# score-prep variants (`Duke/agg_functions.py:7-14`)
-def exponential(vector):
-    return [float(np.exp(v)) for v in vector]
+class TreeLevels:
+    """Bottom-up fold schedule over the ``children`` lists: node heights
+    (0 for a leaf, else 1 + the highest child) and, per height and
+    fan-out, the node indices with their (n, fan-out) child-index matrix,
+    in height order. ``parents`` lists are not read, so a child whose
+    ``parents`` omits its parent folds like any other. A cycle (a
+    self-loop included) has no bottom-up order and raises ValueError."""
 
-
-def step(vector):
-    return [v if v > 0.5 else 0.0 for v in vector]
-
-
-def quadratic(vector):
-    return [v * v for v in vector]
-
-
-PRODUCTION_TREE_AGG = parent_children_funcs(np.mean, max)
-
-
-def canonical_type(classes: Sequence[str], scores: np.ndarray, tree: Tree,
-                   agg_func: Callable = PRODUCTION_TREE_AGG) -> str:
-    """Aggregate a per-class score vector up the tree and pick the winner
-    (argmax, first occurrence wins — ``Duke/dataset_descriptor.py:84``)."""
-    score_map = dict(zip(classes, scores.tolist()))
-    agg = tree_score(score_map, tree, agg_func)
-    vec = np.array([agg[c] for c in classes])
-    return classes[int(np.argmax(vec))]
+    def __init__(self, classes: Sequence[str], tree: Tree):
+        index = {c: i for i, c in enumerate(classes)}
+        children = [[index[ch] for ch in tree[c].get("children") or []]
+                    for c in classes]
+        self.height = [0] * len(classes)
+        self.steps = []
+        pending = {i for i, ch in enumerate(children) if ch}
+        while pending:
+            ready = sorted(i for i in pending
+                           if pending.isdisjoint(children[i]))
+            if not ready:
+                # every pending node has a pending child: walk them
+                # until a node repeats, which puts it on a cycle
+                node, seen = min(pending), set()
+                while node not in seen:
+                    seen.add(node)
+                    node = next(c for c in children[node] if c in pending)
+                raise ValueError(
+                    f"class tree has a cycle through {classes[node]!r}")
+            pending.difference_update(ready)
+            by_fan: Dict[int, List[int]] = {}
+            for i in ready:
+                self.height[i] = 1 + max(self.height[c] for c in children[i])
+                by_fan.setdefault(len(children[i]), []).append(i)
+            self.steps += [(np.array(nodes),
+                            np.array([children[i] for i in nodes]))
+                           for nodes in by_fan.values()]
 
 
 def aggregate_tree_scores(classes: Sequence[str], scores: np.ndarray,
-                          tree: Tree,
-                          agg_func: Callable = PRODUCTION_TREE_AGG) -> np.ndarray:
-    """Vectorized form of ``DatasetDescriptor.aggregate_tree_scores``
-    (``Duke/dataset_descriptor.py:99-107``)."""
-    score_map = dict(zip(classes, scores.tolist()))
-    agg = tree_score(score_map, tree, agg_func)
-    return np.array([agg[c] for c in classes])
+                          tree: Union[Tree, TreeLevels],
+                          agg: TreeAgg = PRODUCTION_TREE_AGG) -> np.ndarray:
+    """Fold class scores up the tree (``DatasetDescriptor.
+    aggregate_tree_scores``, ``Duke/dataset_descriptor.py:99-107``).
+
+    ``scores`` is one (C,) vector or an (N, C) matrix whose columns follow
+    ``classes``; the result has the same shape. ``tree`` is the class tree
+    or its prebuilt ``TreeLevels`` schedule (``LinkContext.levels``)."""
+    levels = tree if isinstance(tree, TreeLevels) else TreeLevels(classes,
+                                                                  tree)
+    own = np.asarray(scores, dtype=np.float64)
+    out = own.copy()
+    for nodes, kids in levels.steps:
+        # C-contiguous, so the mean reduces each child list in NumPy's
+        # pairwise order, exactly as np.mean does on that list alone
+        gathered = np.ascontiguousarray(out[..., kids])
+        child = (gathered.max(axis=-1) if agg.children == "max"
+                 else gathered.mean(axis=-1))
+        mine = own[..., nodes]
+        out[..., nodes] = (np.maximum(mine, child) if agg.parent == "max"
+                           else (mine + child) / 2)
+    return out

@@ -1,5 +1,5 @@
 """Canonicalization (SURVEY B6): per-entity class-score aggregation up the
-ontology tree, production agg ``parent_children_funcs(np.mean, max)``
+ontology tree, production agg parent = mean, children = max
 (``Duke/DukeRestListener.py:37-39``).
 
 Scale shape (SURVEY §4): the per-mention score matrix NEVER leaves the
@@ -8,14 +8,13 @@ mention occurrences equals the count-weighted mean over DISTINCT mention
 strings — so the only shuffle is ``groupBy(entity, mention).count()``
 (tiny: bounded by distinct mention text), followed by an
 ``applyInPandas`` re-score per entity group (≤ C groups) emitting one
-C-float row per entity. The ≤788×788-float result is collected and folded
-on the driver exactly like the reference
-(``Duke/dataset_descriptor.py:99-107`` → ``Duke/class_tree.py:63-91``).
+C-float row per entity. Entities are ``classes[argmax]``, so at most C
+rows reach the driver, where they are folded up the tree as ONE (N, C)
+matrix (``kernel.tree.aggregate_tree_scores``; reference:
+``Duke/dataset_descriptor.py:99-107`` → ``Duke/class_tree.py:63-91``).
 """
 
 from __future__ import annotations
-
-from typing import Dict
 
 import numpy as np
 import pandas as pd
@@ -53,27 +52,26 @@ def entity_mean_scores(mentions: DataFrame, ctx_bc) -> DataFrame:
         agg_group, schema=_ENTITY_SCORES_SCHEMA)
 
 
-def canonical_types(mentions: DataFrame, ctx_bc,
-                    tree_agg=PRODUCTION_TREE_AGG) -> pd.DataFrame:
-    """Collect per-entity mean vectors (≤ C rows) and fold each up the tree
-    on the driver; returns pandas (entity, canonical_type, n_mentions)."""
+def canonical_types(mentions: DataFrame, ctx_bc) -> pd.DataFrame:
+    """Collect per-entity mean vectors (≤ C rows) and fold them up the tree
+    in one call on the driver; returns pandas (entity, canonical_type,
+    n_mentions)."""
     ctx: LinkContext = ctx_bc.value
-    rows = entity_mean_scores(mentions, ctx_bc).collect()
-    out = []
-    for r in rows:
-        vec = np.asarray(r["mean_scores"], dtype=np.float64)
-        agg = aggregate_tree_scores(ctx.classes, vec, ctx.tree, tree_agg)
-        out.append((r["entity"], ctx.classes[int(np.argmax(agg))],
-                    r["n_mentions"]))
-    return (pd.DataFrame(out, columns=["entity", "canonical_type",
-                                       "n_mentions"])
+    pdf = entity_mean_scores(mentions, ctx_bc).toPandas()
+    types = []
+    if len(pdf):
+        agg = aggregate_tree_scores(ctx.classes,
+                                    np.stack(pdf["mean_scores"].to_list()),
+                                    ctx.levels, PRODUCTION_TREE_AGG)
+        types = [ctx.classes[i] for i in np.argmax(agg, axis=1)]
+    return (pd.DataFrame({"entity": pdf["entity"], "canonical_type": types,
+                          "n_mentions": pdf["n_mentions"]})
             .sort_values("entity").reset_index(drop=True))
 
 
-def canonical_types_df(spark, mentions: DataFrame, ctx_bc,
-                       tree_agg=PRODUCTION_TREE_AGG) -> DataFrame:
+def canonical_types_df(spark, mentions: DataFrame, ctx_bc) -> DataFrame:
     """Spark DataFrame form, broadcast-join-able against vertices."""
-    pdf = canonical_types(mentions, ctx_bc, tree_agg)
+    pdf = canonical_types(mentions, ctx_bc)
     schema = T.StructType([
         T.StructField("entity", T.StringType()),
         T.StructField("canonical_type", T.StringType()),
@@ -165,17 +163,16 @@ def conversation_class_scores(mentions: DataFrame, ctx_bc) -> DataFrame:
             .groupBy("conv_id").applyInPandas(reduce_group, schema=schema))
 
 
-def describe_conversations(spark, mentions: DataFrame, ctx_bc,
-                           tree_agg=PRODUCTION_TREE_AGG) -> DataFrame:
+def describe_conversations(spark, mentions: DataFrame, ctx_bc) -> DataFrame:
     """Per-conversation canonical topic — Duke's summary sentence
     (``Duke/dataset_descriptor.py:82-88``) over the mention path.
 
-    Unlike entity canonicalization (≤ C entities → driver fold is fine),
-    conversations are unbounded, so the tree fold runs INSIDE the
-    ``applyInPandas`` group worker (it is a pure function of the broadcast
-    context) and only (conv_id, topic) rows ever leave the workers — no
-    per-conversation score vectors on the driver at any scale. Scoring
-    happens once per distinct mention per batch in the partial stage."""
+    Conversations are unbounded, so the tree fold runs in the workers:
+    ``conversation_class_scores`` reduces the batch partials to one mean
+    vector per conversation, then each Arrow batch of those rows is
+    folded as one (N, C) matrix, and only (conv_id, topic) rows leave
+    the workers — no per-conversation score vectors on the driver at any
+    scale."""
     from duke_spark.kernel.text import pluralize
 
     schema = T.StructType([
@@ -185,19 +182,22 @@ def describe_conversations(spark, mentions: DataFrame, ctx_bc,
         T.StructField("n_mentions", T.LongType()),
     ])
 
-    def finalize(pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(batches):
         ctx: LinkContext = ctx_bc.value
-        sums = np.sum(np.stack(pdf["sum_scores"].to_list()), axis=0)
-        n = int(pdf["n"].sum())
-        agg = aggregate_tree_scores(ctx.classes, sums / n, ctx.tree,
-                                    tree_agg)
-        top = ctx.classes[int(np.argmax(agg))]
-        return pd.DataFrame({
-            "conv_id": [pdf["conv_id"].iloc[0]],
-            "topic": [top],
-            "description": [f"This conversation is about {pluralize(top)}."],
-            "n_mentions": [n],
-        })
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            agg = aggregate_tree_scores(
+                ctx.classes, np.stack(pdf["mean_scores"].to_list()),
+                ctx.levels, PRODUCTION_TREE_AGG)
+            topics = [ctx.classes[i] for i in np.argmax(agg, axis=1)]
+            yield pd.DataFrame({
+                "conv_id": pdf["conv_id"],
+                "topic": topics,
+                "description": [f"This conversation is about "
+                                f"{pluralize(t)}." for t in topics],
+                "n_mentions": pdf["n_mentions"],
+            })
 
-    return (_conv_score_partials(mentions, ctx_bc)
-            .groupBy("conv_id").applyInPandas(finalize, schema=schema))
+    return conversation_class_scores(mentions, ctx_bc).mapInPandas(
+        run, schema=schema)

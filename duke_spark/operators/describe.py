@@ -10,17 +10,18 @@ here a whole turn is ONE word-group with the all-or-nothing OOV rule
 (``Duke/embedding.py:41-44``): any OOV token drops the entire turn.
 
 Per source: row agg = mean of cell score vectors
-(``Duke/dataset_descriptor.py:73-74``), tree agg = production
-``parent_children_funcs(mean, max)`` (``Duke/DukeRestListener.py:37-39``),
-then source agg = mean across sources (``:110-114``); argmax → pluralized
-summary sentence (``:82-88``).
+(``Duke/dataset_descriptor.py:73-74``), tree agg = production parent =
+mean, children = max (``Duke/DukeRestListener.py:37-39``), then source
+agg = mean across sources (``:110-114``); argmax → pluralized summary
+sentence (``:82-88``).
 
 Physical shape: one narrow ``mapInPandas`` computes per-(conv, role)
 PARTIAL sums of cell score vectors (so shuffle volume is
 O(convs × roles × C), never O(turns × C)); one ``groupBy(conv_id)``
 ``applyInPandas`` finalizes: merge partials, build + score the headers
-source, fold each source up the tree, mean across sources, argmax. The
-tree fold is a pure function of the broadcast context, so nothing but
+source, fold the conversation's (sources × C) matrix up the tree in one
+``aggregate_tree_scores`` call, mean across sources, argmax. The fold is
+a pure function of the broadcast context, so nothing but
 (conv_id, description) rows reach the driver at any scale.
 """
 
@@ -102,8 +103,7 @@ def source_score_partials(transcripts: DataFrame, ctx_bc) -> DataFrame:
     return pruned.mapInPandas(run, schema=_PARTIAL_SCHEMA)
 
 
-def describe_dataset(transcripts: DataFrame, ctx_bc,
-                     tree_agg=PRODUCTION_TREE_AGG, top_n: int = 10) -> dict:
+def describe_dataset(transcripts: DataFrame, ctx_bc, top_n: int = 10) -> dict:
     """Duke's primary CLI output (``Duke/scripts/main.py:31-36``) over the
     WHOLE table: role columns are the sources, every turn a cell, plus the
     headers source; returns {"description", "top"} exactly like
@@ -111,11 +111,12 @@ def describe_dataset(transcripts: DataFrame, ctx_bc,
 
     Distributed shape: the per-batch partials (B3 kernel) are reduced to
     one (source → mean vector) map with a single hash-aggregate shuffle
-    keyed by source (≤ #roles keys); the ≤C-float fold happens on the
-    driver like the reference. Top-k sort semantics match
+    keyed by source (≤ #roles keys); the (sources × C) fold happens on
+    the driver like the reference. Top-k sort semantics match
     ``Duke/dataset_descriptor.py:91-97`` (score desc, stable)."""
     per_source = dataset_source_means(transcripts, ctx_bc)
-    return _fold_and_describe(per_source, ctx_bc.value, tree_agg, top_n)
+    return _fold_and_describe(per_source, ctx_bc.value, PRODUCTION_TREE_AGG,
+                              top_n)
 
 
 def dataset_source_means(transcripts: DataFrame, ctx_bc) -> list:
@@ -151,9 +152,9 @@ def dataset_source_means(transcripts: DataFrame, ctx_bc) -> list:
 def _fold_and_describe(per_source: list, ctx, tree_agg, top_n: int) -> dict:
     if not per_source:
         return {"description": None, "top": []}
-    folded = [aggregate_tree_scores(ctx.classes, v, ctx.tree, tree_agg)
-              for v in per_source]
-    final = np.mean(np.stack(folded), axis=0)
+    folded = aggregate_tree_scores(ctx.classes, np.stack(per_source),
+                                   ctx.levels, tree_agg)
+    final = np.mean(folded, axis=0)
     order = np.argsort(-final, kind="stable")[:top_n]
     top = [(ctx.classes[i], float(final[i])) for i in order]
     word = pluralize(ctx.classes[int(np.argmax(final))])
@@ -186,8 +187,7 @@ def _reduce_source_partials(pdf: pd.DataFrame) -> pd.DataFrame:
     })
 
 
-def describe_conversations_duke(transcripts: DataFrame, ctx_bc,
-                                tree_agg=PRODUCTION_TREE_AGG) -> DataFrame:
+def describe_conversations_duke(transcripts: DataFrame, ctx_bc) -> DataFrame:
     """Full Duke EP1 semantics per conversation (see module docstring)."""
     partials = source_score_partials(transcripts, ctx_bc)
     headers = (transcripts
@@ -218,9 +218,9 @@ def describe_conversations_duke(transcripts: DataFrame, ctx_bc,
                     n=("n_cells", "sum")))
         for _, row in agg.iterrows():
             per_source.append(np.asarray(row["sum_scores"]) / row["n"])
-        folded = [aggregate_tree_scores(ctx.classes, v, ctx.tree, tree_agg)
-                  for v in per_source]
-        final = np.mean(np.stack(folded), axis=0)
+        folded = aggregate_tree_scores(ctx.classes, np.stack(per_source),
+                                       ctx.levels, PRODUCTION_TREE_AGG)
+        final = np.mean(folded, axis=0)
         top = ctx.classes[int(np.argmax(final))]
         return pd.DataFrame({
             "conv_id": [conv_id],

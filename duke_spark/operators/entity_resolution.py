@@ -164,12 +164,14 @@ def resolve_kg_entities(triples: DataFrame, ctx_bc, threshold: float,
                    "embedding": [[float(x) for x in v] for v in vecs]}
             if type_guard:
                 # single-occurrence canonicalization of the surface
-                # form itself: score → tree fold → argmax class
-                scores = score_against_classes(vecs, ctx.class_matrix)
-                out["ctype"] = [
-                    ctx.classes[int(np.argmax(aggregate_tree_scores(
-                        ctx.classes, s, ctx.tree, PRODUCTION_TREE_AGG)))]
-                    for s in scores]
+                # form itself: score → tree fold (one call for the
+                # batch) → argmax class
+                agg = aggregate_tree_scores(
+                    ctx.classes,
+                    score_against_classes(vecs, ctx.class_matrix),
+                    ctx.levels, PRODUCTION_TREE_AGG)
+                out["ctype"] = [ctx.classes[i]
+                                for i in np.argmax(agg, axis=1)]
             yield pd.DataFrame(out)
 
     # persist: the embed pass (the pipeline's dominant matmul, plus the

@@ -28,7 +28,7 @@ import numpy as np
 import pandas as pd
 
 from duke_spark.kernel.text import tokenize_series
-from duke_spark.kernel.tree import Tree, normalize_class_tree
+from duke_spark.kernel.tree import Tree, TreeLevels, normalize_class_tree
 from duke_spark.kernel.vectors import (VocabEmbedding, score_against_classes,
                                        unit_norm_rows)
 
@@ -36,7 +36,8 @@ MAX_MENTION_LEN = 3
 
 
 class LinkContext:
-    """Embedding + normalized class tree + embedded class matrix."""
+    """Embedding + normalized class tree (+ its fold schedule, which
+    refuses a cyclic tree here) + embedded class matrix."""
 
     def __init__(self, vocab: List[str], matrix: np.ndarray, raw_tree: Tree):
         self._vocab_list = vocab
@@ -44,6 +45,7 @@ class LinkContext:
         emb = VocabEmbedding(vocab, self._matrix)
         self.tree: Tree = normalize_class_tree(raw_tree, emb.in_vocab)
         self.classes: List[str] = list(self.tree.keys())
+        self.levels = TreeLevels(self.classes, self.tree)
         self._class_matrix = emb.embed_groups(
             [c.split(" ") for c in self.classes])
         self._embedding: Optional[VocabEmbedding] = emb
@@ -53,7 +55,7 @@ class LinkContext:
     def __getstate__(self):
         return {"_vocab_list": self._vocab_list, "_matrix": self._matrix,
                 "tree": self.tree, "classes": self.classes,
-                "_class_matrix": self._class_matrix}
+                "levels": self.levels, "_class_matrix": self._class_matrix}
 
     def __setstate__(self, state):
         self.__dict__.update(state)

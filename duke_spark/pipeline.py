@@ -1,20 +1,21 @@
 """End-to-end KG construction pipeline (SURVEY §7 step 2-4 spine).
 
-transcripts ──mapInPandas──► linked mentions ──► triples (fused one-pass)
-                     │                               │
-                     ├─► canonicalization (tiny shuffle + driver fold)
-                     └─► vertices/edges (hash aggregates, broadcast joins)
+transcripts ──mapInPandas──► linked mentions (persisted) ──► triples
+                                    │
+                                    ├─► canonicalization (tiny shuffle +
+                                    │   one batched driver fold)
+                                    └─► vertices/edges (hash aggregates,
+                                        broadcast joins)
 
-Physical profile: one narrow UDF stage over the scan + two small shuffles
-(entity/mention counts; edge aggregation) + a ≤788-row driver fold — the
-shape SURVEY §4 calls for. Skew: the UDF stage is per-split (hot
-conversations don't matter there); grouped stages lean on AQE skew
-handling, enabled in config.get_spark.
+Physical profile: one narrow UDF stage over the scan + a window shuffle
+for triples + two small shuffles (entity/mention counts; edge
+aggregation) + one (≤ C × C) driver fold — the shape SURVEY §4 calls
+for. Skew: the UDF stage is per-split (hot conversations don't matter
+there); grouped stages lean on AQE skew handling, enabled in
+config.get_spark.
 """
 
 from __future__ import annotations
-
-from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -22,8 +23,7 @@ from duke_spark.operators.canonical import canonical_types_df
 from duke_spark.operators.graph import build_edges, build_vertices
 from duke_spark.operators.linking import LinkContext
 from duke_spark.operators.mentions import linked_mentions
-from duke_spark.operators.triples import (extract_triples,
-                                          triples_from_mentions)
+from duke_spark.operators.triples import triples_from_mentions
 
 
 def make_context(spark: SparkSession, vocab=None, matrix=None,
@@ -40,20 +40,15 @@ def make_context(spark: SparkSession, vocab=None, matrix=None,
     return spark.sparkContext.broadcast(ctx)
 
 
-def build_kg(spark: SparkSession, transcripts: DataFrame, ctx_bc,
-             persist_mentions: bool = True) -> dict:
+def build_kg(spark: SparkSession, transcripts: DataFrame, ctx_bc) -> dict:
     """Run the full pipeline; returns dict of DataFrames (lazy where
     possible). Mentions are persisted because three consumers share them
-    (the reference's embed-once-reuse pattern, ``Duke/evaluate.py:78-86``).
+    (the reference's embed-once-reuse pattern, ``Duke/evaluate.py:78-86``);
+    triples reuse them, since one window shuffle beats re-scanning and
+    re-embedding the input.
     """
-    mentions = linked_mentions(transcripts, ctx_bc)
-    if persist_mentions:
-        mentions = mentions.persist()
-        # reuse the persisted (already embedded+linked) mentions — one
-        # window shuffle beats re-scanning + re-embedding the input
-        triples = triples_from_mentions(mentions)
-    else:
-        triples = extract_triples(transcripts, ctx_bc)
+    mentions = linked_mentions(transcripts, ctx_bc).persist()
+    triples = triples_from_mentions(mentions)
     canonical = canonical_types_df(spark, mentions, ctx_bc)
     vertices = build_vertices(mentions, canonical)
     edges = build_edges(triples)

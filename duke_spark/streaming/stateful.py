@@ -11,9 +11,10 @@ micro-batch:
   2. per conversation group, the state (sum_vec, n) is updated with the
      new mentions' score vectors — mean = sum/n stays exact because the
      row mean is algebraic, so streaming order cannot change the result;
-  3. the updated mean is folded up the class tree (broadcast context,
-     worker-side) and the row emitted is the conversation's CURRENT
-     canonical topic.
+  3. the updated means leave the state function as (conv_id, mean, n)
+     rows; a stateless ``mapInPandas`` folds each Arrow batch of them up
+     the class tree in one call (broadcast context, worker-side) and
+     emits every conversation's CURRENT canonical topic.
 
 After processing all input, per-conversation topics are exactly equal to
 the batch pipeline's (tested) — the streaming operator is an incremental
@@ -38,6 +39,12 @@ from duke_spark.kernel.tree import PRODUCTION_TREE_AGG, aggregate_tree_scores
 from duke_spark.kernel.vectors import score_against_classes
 
 STATE_SCHEMA = "sum_scores array<double>, n bigint"
+
+_MEAN_SCHEMA = T.StructType([
+    T.StructField("conv_id", T.StringType()),
+    T.StructField("mean_scores", T.ArrayType(T.DoubleType())),
+    T.StructField("n_mentions", T.LongType()),
+])
 
 OUT_SCHEMA = T.StructType([
     T.StructField("conv_id", T.StringType()),
@@ -86,16 +93,27 @@ def running_conversation_topics(mentions: DataFrame, ctx_bc,
         state.update((total.tolist(), n))
         if idle_timeout_ms > 0:
             state.setTimeoutDuration(idle_timeout_ms)
-        mean = total / n
-        agg = aggregate_tree_scores(ctx.classes, mean, ctx.tree,
-                                    PRODUCTION_TREE_AGG)
-        topic = ctx.classes[int(np.argmax(agg))]
-        yield pd.DataFrame({"conv_id": [key[0]], "topic": [topic],
+        yield pd.DataFrame({"conv_id": [key[0]],
+                            "mean_scores": [(total / n).tolist()],
                             "n_mentions": [n]})
+
+    def fold(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        ctx = ctx_bc.value
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            agg = aggregate_tree_scores(
+                ctx.classes, np.stack(pdf["mean_scores"].to_list()),
+                ctx.levels, PRODUCTION_TREE_AGG)
+            yield pd.DataFrame({
+                "conv_id": pdf["conv_id"],
+                "topic": [ctx.classes[i] for i in np.argmax(agg, axis=1)],
+                "n_mentions": pdf["n_mentions"]})
 
     timeout = (GroupStateTimeout.ProcessingTimeTimeout if idle_timeout_ms > 0
                else GroupStateTimeout.NoTimeout)
     return (mentions.select("conv_id", "mention")
             .groupBy("conv_id")
-            .applyInPandasWithState(update, OUT_SCHEMA, STATE_SCHEMA,
-                                    "update", timeout))
+            .applyInPandasWithState(update, _MEAN_SCHEMA, STATE_SCHEMA,
+                                    "update", timeout)
+            .mapInPandas(fold, schema=OUT_SCHEMA))

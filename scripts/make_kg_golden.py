@@ -50,7 +50,8 @@ from duke_spark.fixtures.embedding import _word_vector  # noqa: E402
 from duke_spark.kernel.oracle import (OracleContext,  # noqa: E402
                                       describe_conversation,
                                       oracle_canonical_types,
-                                      oracle_mentions, oracle_triples)
+                                      oracle_mentions, oracle_topic,
+                                      oracle_triples)
 from duke_spark.kernel.text import normalize_text  # noqa: E402
 from duke_spark.kernel.vectors import VocabEmbedding  # noqa: E402
 
@@ -174,14 +175,10 @@ def golden_conv_topics(ctx: OracleContext,
     """Expected describe_conversations output: per-conversation canonical
     topic from the mean mention class-score vector folded up the tree."""
     from duke_spark.kernel.text import pluralize
-    from duke_spark.kernel.tree import (PRODUCTION_TREE_AGG,
-                                        aggregate_tree_scores)
     rows = []
     for conv_id, grp in mentions.groupby("conv_id", sort=True):
         mean_vec = np.mean(np.stack(grp["class_scores"].to_list()), axis=0)
-        agg = aggregate_tree_scores(ctx.classes, mean_vec, ctx.tree,
-                                    PRODUCTION_TREE_AGG)
-        top = ctx.classes[int(np.argmax(agg))]
+        top = oracle_topic(ctx, mean_vec)
         rows.append({"conv_id": conv_id, "topic": top,
                      "description":
                          f"This conversation is about {pluralize(top)}.",

@@ -9,7 +9,10 @@ from hypothesis import strategies as st
 
 from duke_spark.kernel.text import (normalize_text, normalize_text_series,
                                     underscore)
-from duke_spark.kernel.tree import (parent_children_funcs, tree_score)
+from duke_spark.eval import config_grid
+from duke_spark.kernel.oracle import tree_score
+from duke_spark.kernel.tree import (PRODUCTION_TREE_AGG, TreeAgg,
+                                    aggregate_tree_scores)
 from duke_spark.kernel.vectors import chunk_in_vocab_runs, unit_norm_rows
 
 TEXT = st.text(
@@ -103,12 +106,33 @@ def test_tree_score_max_agg_equals_subtree_max(ts):
 @given(chain_tree())
 @settings(max_examples=150, deadline=None)
 def test_tree_score_production_agg_bounds(ts):
-    """parent_children_funcs(mean, max): every folded score lies within
+    """TreeAgg("mean", "max"): every folded score lies within
     [min(subtree raw), max(subtree raw)] — a mean/max mix can't escape the
     convex hull of its inputs."""
     tree, scores = ts
-    agg = parent_children_funcs(np.mean, max)
+    agg = TreeAgg("mean", "max")
     folded = tree_score(scores, tree, agg)
     lo, hi = min(scores.values()), max(scores.values())
     for n, v in folded.items():
         assert lo - 1e-12 <= v <= hi + 1e-12
+
+
+@given(chain_tree(), st.integers(min_value=0, max_value=2**32 - 1))
+@settings(max_examples=150, deadline=None)
+def test_batched_fold_equals_oracle(ts, seed):
+    """aggregate_tree_scores on an (N, C) batch equals the scalar oracle
+    tree_score row by row, and each row equals the 1-D fold of that row,
+    with atol=0, for the production agg and every config_grid config."""
+    tree, scores = ts
+    classes = list(tree)
+    rng = np.random.default_rng(seed)
+    batch = np.vstack([[scores[c] for c in classes],
+                       rng.uniform(0.01, 1.0, (3, len(classes)))])
+    for agg in [PRODUCTION_TREE_AGG, *config_grid().values()]:
+        got = aggregate_tree_scores(classes, batch, tree, agg)
+        for row, folded in zip(batch, got):
+            exp = tree_score(dict(zip(classes, row.tolist())), tree, agg)
+            np.testing.assert_array_equal(folded,
+                                          [exp[c] for c in classes])
+            np.testing.assert_array_equal(
+                aggregate_tree_scores(classes, row, tree, agg), folded)

@@ -18,7 +18,8 @@ import __spark_entry__ as entry
 from duke_spark.fixtures.class_tree import mini_tree
 from duke_spark.kernel.oracle import (OracleContext, describe_conversation,
                                       oracle_canonical_types,
-                                      oracle_mentions, oracle_triples)
+                                      oracle_mentions, oracle_topic,
+                                      oracle_triples)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -91,18 +92,14 @@ def test_kg_duke_describe_full_parity(spark, driver_ctx, transcripts_pdf):
 
 
 def test_kg_conv_topics_full_parity(spark, driver_ctx, transcripts_pdf):
-    from duke_spark.kernel.tree import (PRODUCTION_TREE_AGG,
-                                        aggregate_tree_scores)
     got = entry.kg_conv_topics(spark, SF_DIR).toPandas() \
         .set_index("conv_id").sort_index()
     men = oracle_mentions(driver_ctx, transcripts_pdf)
     assert set(got.index) == set(men["conv_id"].unique())
     for conv_id, grp in men.groupby("conv_id"):
         mean_vec = np.mean(np.stack(grp["class_scores"].to_list()), axis=0)
-        agg = aggregate_tree_scores(driver_ctx.classes, mean_vec,
-                                    driver_ctx.tree, PRODUCTION_TREE_AGG)
-        exp_topic = driver_ctx.classes[int(np.argmax(agg))]
-        assert got.loc[conv_id, "topic"] == exp_topic, conv_id
+        assert got.loc[conv_id, "topic"] == oracle_topic(driver_ctx,
+                                                         mean_vec), conv_id
         assert got.loc[conv_id, "n_mentions"] == len(grp), conv_id
 
 

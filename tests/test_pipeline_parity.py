@@ -6,8 +6,8 @@ import pandas as pd
 import pytest
 
 from duke_spark.kernel.oracle import (oracle_canonical_types,
-                                      oracle_mentions, oracle_triples,
-                                      triple_prf)
+                                      oracle_mentions, oracle_topic,
+                                      oracle_triples, triple_prf)
 from duke_spark.operators.canonical import canonical_types
 from duke_spark.operators.mentions import linked_mentions
 from duke_spark.operators.triples import (extract_triples,
@@ -97,8 +97,6 @@ def test_describe_conversations_matches_oracle(spark, tiny_transcripts,
                                                ctx_bc, expected_mentions):
     """Worker-side tree fold (describe_conversations) == driver-side oracle
     fold over per-conversation mean score vectors."""
-    from duke_spark.kernel.tree import (PRODUCTION_TREE_AGG,
-                                        aggregate_tree_scores)
     from duke_spark.operators.canonical import describe_conversations
 
     mentions = linked_mentions(tiny_transcripts, ctx_bc)
@@ -109,9 +107,7 @@ def test_describe_conversations_matches_oracle(spark, tiny_transcripts,
     exp = {}
     for conv_id, grp in expected_mentions.groupby("conv_id"):
         mean_vec = np.mean(np.stack(grp["class_scores"].to_list()), axis=0)
-        agg = aggregate_tree_scores(ctx.classes, mean_vec, ctx.tree,
-                                    PRODUCTION_TREE_AGG)
-        exp[conv_id] = (ctx.classes[int(np.argmax(agg))], len(grp))
+        exp[conv_id] = (oracle_topic(ctx, mean_vec), len(grp))
 
     assert set(got.index) == set(exp)
     for conv_id, (topic, n) in exp.items():

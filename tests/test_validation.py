@@ -108,19 +108,19 @@ def test_bad_cardinality_raises(kg):
         validate_graph(kg, {"used_tool": {"max_distinct_objects": 0}})
 
 
-def test_build_kg_job_validate_and_fact_support(tmp_path):
-    """The production job wires both stages: violations + fact_support
-    parquet written, per-rule counts in the metrics JSON."""
+def run_build_kg_job(out, *args):
+    """Run jobs/build_kg.py with --validate --fact-support --resolve 0.99
+    plus ``args``; return its metrics record after checking that every
+    post stage wrote its output."""
     import json
     import os
     import subprocess
     import sys
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    out = tmp_path / "kg"
     proc = subprocess.run(
         [sys.executable, os.path.join(repo, "jobs", "build_kg.py"),
-         "--convs", "20", "--out", str(out), "--parallelism", "2",
-         "--validate", "--fact-support", "--resolve", "0.99"],
+         "--out", str(out), "--parallelism", "2", "--validate",
+         "--fact-support", "--resolve", "0.99", *args],
         capture_output=True, text=True, timeout=420)
     assert proc.returncode == 0, proc.stderr[-3000:]
     rec = json.loads([ln for ln in proc.stdout.splitlines()
@@ -130,17 +130,58 @@ def test_build_kg_job_validate_and_fact_support(tmp_path):
     assert (out / "violations").exists()
     assert (out / "fact_support").exists()
     assert (out / "merge_map").exists()
-    # composition: validate/fact-support consume the RESOLVED triples —
-    # and when resolution merges nothing the identity rewrite is
-    # SKIPPED (no triples_resolved copy; downstream reads the
-    # checkpoint store, which is byte-identical by definition)
-    n_merged = rec["stages"]["resolve_merged"]["rows"]
-    if n_merged:
-        assert (out / "triples_resolved").exists()
-    else:
-        assert rec["stages"]["resolve_merged"]["rewrite"].startswith(
-            "skipped")
-        assert not (out / "triples_resolved").exists()
+    return rec
+
+
+def test_build_kg_job_validate_and_fact_support(tmp_path):
+    """The production job wires both stages: violations + fact_support
+    parquet written, per-rule counts in the metrics JSON. The synthetic
+    input has no aliases, so resolution merges nothing and the identity
+    rewrite is SKIPPED (no triples_resolved copy; downstream reads the
+    checkpoint store, which is byte-identical by definition)."""
+    out = tmp_path / "kg"
+    rec = run_build_kg_job(out, "--convs", "20")
+    assert rec["stages"]["resolve_merged"]["rows"] == 0
+    assert rec["stages"]["resolve_merged"]["rewrite"].startswith("skipped")
+    assert not (out / "triples_resolved").exists()
+
+
+def test_build_kg_job_resolves_planted_aliases(tmp_path):
+    """An --input whose turns name two near-identical words ('acme' /
+    'acmecorp', both ontology classes in the --model/--ontology pair):
+    resolution merges them, and validate/fact-support consume the
+    written triples_resolved store."""
+    import json
+
+    import numpy as np
+
+    from duke_spark.fixtures.class_tree import mini_tree
+    from duke_spark.fixtures.embedding import embedding_arrays
+    from duke_spark.fixtures.transcripts import generate_transcripts
+    from duke_spark.sources.embedding_model import save_distributable
+
+    vocab, matrix = embedding_arrays()
+    acme = np.random.default_rng(3).normal(0, 1, matrix.shape[1])
+    vocab = list(vocab) + ["acme", "acmecorp"]
+    matrix = np.vstack([matrix, acme, acme + 1e-3]).astype(np.float32)
+    _, model = save_distributable(vocab, matrix, str(tmp_path / "model"))
+    tree = mini_tree()
+    for c in ("acme", "acmecorp"):
+        tree[c] = {"parents": [], "children": []}
+    onto = tmp_path / "tree.json"
+    onto.write_text(json.dumps(tree))
+    pdf = generate_transcripts(n_convs=8, max_turns=6, seed=42)
+    pdf.loc[0, "text"] = "acme"
+    pdf.loc[len(pdf) - 1, "text"] = "acmecorp"
+    src = tmp_path / "transcripts.parquet"
+    pdf.to_parquet(src, index=False)
+
+    out = tmp_path / "kg"
+    rec = run_build_kg_job(out, "--input", str(src), "--model", model,
+                           "--ontology", str(onto))
+    assert rec["stages"]["resolve_merged"]["rows"] > 0
+    assert rec["stages"]["resolve_merged"]["rewrite"] == "written"
+    assert (out / "triples_resolved").exists()
 
 
 # --- fact_support --------------------------------------------------------
@@ -152,6 +193,8 @@ def test_fact_support_rollup(spark):
         ("ent:a", "co_mentioned", "ent:b", "c1", 3, 0.5),
         ("ent:a", "co_mentioned", "ent:b", "c2", 1, 0.7),
         ("ent:a", "used_tool", "tool:t", "c1", 0, 1.0),
+        # a NULL conversation is evidence, not a conversation
+        ("ent:a", "used_tool", "tool:t", None, 2, 0.5),
     ]
     df = spark.createDataFrame(pd.DataFrame(
         rows, columns=["subj", "pred", "obj", "conv_id", "turn_idx",
@@ -161,7 +204,7 @@ def test_fact_support_rollup(spark):
            for r in fact_support(df).collect()}
     assert got[("ent:a", "co_mentioned", "ent:b")] == (
         3, 2, 0.9, round((0.9 + 0.5 + 0.7) / 3, 6))
-    assert got[("ent:a", "used_tool", "tool:t")] == (1, 1, 1.0, 1.0)
+    assert got[("ent:a", "used_tool", "tool:t")] == (2, 1, 1.0, 0.75)
 
 
 def test_filter_rules_have_no_exchange(spark, kg):
